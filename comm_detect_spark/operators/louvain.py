@@ -21,6 +21,21 @@ Coarsen (plm.cc:48-171) is two hash joins + one hash agg:
 maps + tree merge. weight_net is invariant across levels (plm.cc:151).
 Levels shrink geometrically, so late levels auto-broadcast under AQE.
 
+Lineage-free tables: a table an operator already materializes is
+materialized lineage-free, and no job is added only to cut lineage. Each
+level's src-partitioned edge table is persisted over a lazy local
+checkpoint of its input (_louvain_level): the caller's edges at level 1,
+the coarse graph below. So that table, the vols and touch tables
+persisted from it, every sweep, the store writes and the moved check plan
+against a leaf, not against the caller's whole cached pipeline, which AQE
+would re-render at each stage update (on the crawl benchmark's pipeline:
+a 1.31 MB formatted sweep plan without the cut, 40 KB with it).
+weight_net is read from that table, not from the caller's frame. The
+checkpoint's blocks (a row copy of the level's edges) are freed as soon
+as the table is cached, so they live only through that count job. On an
+input read straight from files the cut saves no planning and costs that
+copy, about 1.2 us of CPU per row once per call (PERFORMANCE.md).
+
 num_blocks=1 reproduces oracle.louvain exactly (same kernel, same order).
 """
 
@@ -435,6 +450,15 @@ def coarsen_edges(edges: DataFrame, state: DataFrame) -> DataFrame:
     )
 
 
+def _drop_checkpoint_blocks(cut: DataFrame) -> None:
+    """Free the blocks of a local checkpoint whose one reader has been
+    cached. Spark has no public call for this; left alone they stay in
+    the block manager until a driver-JVM GC lets the ContextCleaner drop
+    the RDD. A recompute of the cache would then fail, so the cache must
+    spill rather than drop blocks (persist()'s default level does)."""
+    cut._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def louvain(
     spark: SparkSession,
     edges: DataFrame,
@@ -473,9 +497,8 @@ def louvain(
         from comm_detect_spark.operators.lpa_async import default_num_blocks
 
         num_blocks = default_num_blocks(spark)
-    w_net = weight_net(edges)
     return _louvain_level(
-        spark, edges, n, w_net, eps, num_blocks, max_levels, max_sweeps,
+        spark, edges, n, None, eps, num_blocks, max_levels, max_sweeps,
         driver_factory, 1, frontier, resume,
     )
 
@@ -485,8 +508,19 @@ def _louvain_level(
     driver_factory, level, frontier=True, resume=False,
 ):
     p = adaptive_partitions(spark, n)
-    e = edges.repartition(p, "src").persist()
+    # the lineage cut sits UNDER the persisted repartition and is filled
+    # by the same count job (its blocks hold a row copy of the input);
+    # once the cache is filled nothing reads the cut, so its blocks go.
+    # Cutting above it measured worse (PERFORMANCE.md): an eager
+    # localCheckpoint of the repartition loses the hash(src, p)
+    # partitioning under AQE, and planned non-adaptive it makes the
+    # vols/touch caches built on it miss
+    cut = edges.localCheckpoint(eager=False)
+    e = cut.repartition(p, "src").persist()
     e.count()
+    _drop_checkpoint_blocks(cut)
+    if w_net is None:  # level 1; invariant across levels (plm.cc:151)
+        w_net = weight_net(e)
     drv = driver_factory() if driver_factory else None
     state, _ = _local_move(
         spark, e, n, w_net, eps, num_blocks, drv, max_sweeps=max_sweeps,
@@ -499,12 +533,11 @@ def _louvain_level(
         # and unused ids become isolated supernodes, as in the reference)
         n2 = int(state.agg(F.max("label")).collect()[0][0]) + 1
         if n2 < n:  # guard: cross-block swaps could leave k == n
-            # truncate: the coarse graph is a new level's base table, it
-            # must not drag the previous level's whole plan behind it
-            coarse_edges = coarsen_edges(e, state).localCheckpoint(eager=True)
+            # the next level's cut materializes the coarse graph in its
+            # own count job, so it needs no checkpoint job of its own
             coarse_state, sub_levels = _louvain_level(
                 spark,
-                coarse_edges,
+                coarsen_edges(e, state),
                 n2,
                 w_net,
                 eps,

@@ -8,9 +8,13 @@ volumes_df (self-loops twice — M5). NOT textbook Newman (the second term is
 a quarter of Newman's) — this is the 1e-6 comparison target, replicated
 exactly.
 
-One job: two edge-scans' worth of aggregation, vertex-sized joins, a scalar
-out. The labels join is broadcast when the state table is small (late
-Louvain levels) — Catalyst/AQE decides.
+One action: the per-community terms and W come out of one aggregation
+(W is the sum of every row's weight, i.e. the rows leaving each
+community), over two edge-scans' worth of aggregation and vertex-sized
+joins. vol^2 is squared in double: a bigint product overflows under
+Spark's ANSI default once a community's volume passes ~3.04e9. The labels
+join is broadcast when the state table is small (late Louvain levels) —
+Catalyst/AQE decides.
 """
 
 from __future__ import annotations
@@ -18,19 +22,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from comm_detect_spark.graph.core import volumes_df, weight_net
+from comm_detect_spark.graph.core import volumes_df
 
 
 def modularity_terms(edges: DataFrame, labels: DataFrame) -> DataFrame:
-    """Per-community terms: (label, w_in, vol). ``labels`` = (vid, label)."""
+    """Per-community terms: (label, w_in, vol, w_out). ``labels`` = (vid,
+    label); w_out = weight of the rows whose src is in the community, so
+    the w_out column sums to W when every vertex is labeled."""
     lab_src = labels.select(F.col("vid").alias("src"), F.col("label").alias("c_src"))
     lab_dst = labels.select(F.col("vid").alias("dst"), F.col("label").alias("c_dst"))
-    w_in = (
+    rows = (
         edges.join(lab_src, "src")
         .join(lab_dst, "dst")
-        .where(F.col("c_src") == F.col("c_dst"))
         .groupBy(F.col("c_src").alias("label"))
-        .agg(F.sum("weight").alias("w_in"))
+        .agg(
+            F.sum(
+                F.when(F.col("c_src") == F.col("c_dst"), F.col("weight"))
+                .otherwise(F.lit(0))
+            ).alias("w_in"),
+            F.sum("weight").alias("w_out"),
+        )
     )
     vol_c = (
         volumes_df(edges)
@@ -38,21 +49,31 @@ def modularity_terms(edges: DataFrame, labels: DataFrame) -> DataFrame:
         .groupBy("label")
         .agg(F.sum("vol").alias("vol"))
     )
-    return vol_c.join(w_in, "label", "left").select(
-        "label", F.coalesce(F.col("w_in"), F.lit(0)).alias("w_in"), "vol"
+    return vol_c.join(rows, "label", "left").select(
+        "label",
+        F.coalesce(F.col("w_in"), F.lit(0)).alias("w_in"),
+        "vol",
+        F.coalesce(F.col("w_out"), F.lit(0)).alias("w_out"),
     )
 
 
 def modularity_score(edges: DataFrame, labels: DataFrame) -> float:
-    w = float(weight_net(edges))
-    terms = modularity_terms(edges, labels)
-    row = terms.agg(
-        F.sum(
-            F.col("w_in") / F.lit(w)
-            - (F.col("vol") * F.col("vol")) / F.lit(4.0 * w * w)
-        ).alias("q")
-    ).collect()[0]
-    return float(row["q"] or 0.0)
+    """Q of the partition ``labels`` (vid, label), which must label every
+    vertex that has an edge (as the oracle's label vector does)."""
+    vol = F.col("vol").cast("double")
+    row = (
+        modularity_terms(edges, labels)
+        .agg(
+            F.sum("w_in").alias("w_in"),
+            F.sum(vol * vol).alias("vol_sq"),
+            F.sum("w_out").alias("w"),
+        )
+        .collect()[0]
+    )
+    w = float(row["w"] or 0)
+    if w == 0.0:
+        return 0.0
+    return float(row["w_in"]) / w - float(row["vol_sq"]) / (4.0 * w * w)
 
 
 def community_conductance(

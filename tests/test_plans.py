@@ -360,3 +360,114 @@ class TestShuffleBudget:
             verts.unpersist()
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def shuffle_exchanges(df) -> int:
+    """Shuffle exchanges the frame's own physical plan runs. A cached
+    relation is a leaf of that tree (its plan already ran), so nothing
+    under an InMemoryTableScan counts; broadcasts don't count."""
+
+    def walk(node) -> int:
+        if node.nodeName() == "AdaptiveSparkPlan":
+            return walk(node.executedPlan())
+        children = node.children()
+        return int(node.nodeName() == "Exchange") + sum(
+            walk(children.apply(i)) for i in range(children.size())
+        )
+
+    return walk(df._jdf.queryExecution().executedPlan())
+
+
+class TestPlanSize:
+    def test_louvain_sweep_plan_independent_of_input_lineage(self, spark):
+        """Louvain cuts the lineage under its level edge table
+        (operators/louvain.py): a sweep must plan the same whether the
+        caller's edges come through 1 or 4 chained persisted stages.
+        Without the cut every upstream cached plan rides into each sweep
+        (a 1.3 MB formatted sweep plan on the crawl pipeline), and AQE
+        re-renders it at every stage update. Broadcasts are off so the
+        shuffle count shows whether the edge table kept its partitioning
+        (an eager localCheckpoint of the repartition loses it under AQE)."""
+        from comm_detect_spark import oracle
+        from comm_detect_spark.graph import edges_from_numpy
+        from comm_detect_spark.operators.louvain import louvain
+        from comm_detect_spark.plans.driver import IterationDriver
+
+        n, s, d, w = oracle.ring_of_cliques(k=6, c=8)
+        base = edges_from_numpy(spark, n, s, d, w)
+        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        shapes, stages = [], []
+        try:
+            for depth in (1, 4):
+                sweeps = []
+
+                class Capture(IterationDriver):
+                    def prepare(self, new_state, iteration):
+                        plan = plan_of(new_state)
+                        sweeps.append(
+                            (
+                                len(plan),
+                                plan.count("InMemoryRelation"),
+                                shuffle_exchanges(new_state),
+                            )
+                        )
+                        return super().prepare(new_state, iteration)
+
+                # each stage a distinct plan, so no two share a cache entry
+                edges = base
+                for i in range(depth):
+                    edges = edges.withColumn(
+                        "weight", F.col("weight") + F.lit(i) - F.lit(i)
+                    ).repartition(3).persist()
+                    edges.count()
+                    stages.append(edges)
+                louvain(
+                    spark, edges, n, num_blocks=4, max_levels=1,
+                    max_sweeps=1, driver_factory=Capture,
+                )
+                shapes.append(sweeps[0])
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+            for df in stages:
+                df.unpersist()
+        (len1, imr1, ex1), (len4, imr4, ex4) = shapes
+        assert imr4 == imr1, shapes
+        # expression/RDD ids differ in width between runs; nothing else may
+        assert len4 < 1.1 * len1, shapes
+        # co-partitioning kept: per sweep, the two block groupings, the
+        # vertex side of each branch's join, the community-volume
+        # aggregation and join in each branch and the moved-labels join —
+        # the edge table and the touch structure are never shuffled
+        assert ex1 == ex4 == 9, shapes
+
+    def test_louvain_frees_edge_table_checkpoints(self, spark, monkeypatch):
+        """Each level's lineage cut holds a row copy of that level's edges
+        only until the level's cached table is filled; left to the
+        ContextCleaner it would stay in the block manager after louvain
+        returns, one edge-table copy per call, until a driver-JVM GC."""
+        import pyspark.sql.classic.dataframe as D
+
+        from comm_detect_spark import oracle
+        from comm_detect_spark.graph import edges_from_numpy
+        from comm_detect_spark.operators.louvain import louvain
+
+        cuts = []
+        orig = D.DataFrame.localCheckpoint
+
+        def spy(self, *a, **k):
+            out = orig(self, *a, **k)
+            if "src" in out.columns:  # edge tables, not label states
+                cuts.append(out._jdf.queryExecution().analyzed().rdd().id())
+            return out
+
+        monkeypatch.setattr(D.DataFrame, "localCheckpoint", spy)
+        n, s, d, w = oracle.ring_of_cliques(k=6, c=8)
+        _, levels = louvain(
+            spark, edges_from_numpy(spark, n, s, d, w), n, num_blocks=2
+        )
+        assert levels >= 2 and len(cuts) >= 2, (levels, cuts)
+        stored = {
+            i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        }
+        assert not stored & set(cuts), (stored, cuts)

@@ -2,15 +2,16 @@
 
 import numpy as np
 
-from comm_detect_spark.oracle.graphs import _JAZZ, parse_dimacs
+from comm_detect_spark.oracle.graphs import parse_dimacs
 from comm_detect_spark.sources.dimacs import read_dimacs
+from tests.conftest import PARITY_GRAPH
 
 
 class TestDimacs:
     def test_jazz_matches_oracle_parser(self, spark):
-        got = read_dimacs(spark, _JAZZ)
+        got = read_dimacs(spark, PARITY_GRAPH)
         rows = sorted((r["src"], r["dst"], r["weight"]) for r in got.collect())
-        n, s, d, w = parse_dimacs(_JAZZ)
+        n, s, d, w = parse_dimacs(PARITY_GRAPH)
         want = sorted(zip(s.tolist(), d.tolist(), w.tolist()))
         assert rows == want
 
@@ -39,10 +40,10 @@ class TestDimacs:
         # zipWithIndex, never monotonically_increasing_id ordering)
         single = sorted(
             (r["src"], r["dst"], r["weight"])
-            for r in read_dimacs(spark, _JAZZ).collect()
+            for r in read_dimacs(spark, PARITY_GRAPH).collect()
         )
         multi = sorted(
             (r["src"], r["dst"], r["weight"])
-            for r in read_dimacs(spark, _JAZZ, min_partitions=8).collect()
+            for r in read_dimacs(spark, PARITY_GRAPH, min_partitions=8).collect()
         )
         assert multi == single
